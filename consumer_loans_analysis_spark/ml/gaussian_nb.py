@@ -19,11 +19,17 @@ Spark-native form:
   ``withVarSmoothing(ε)`` returns a re-smoothed model with **zero refit
   cost** — a 100-trial smoothing sweep is one fit plus 100 cheap scoring
   passes over a cached frame, where the reference refits per trial.
-- **Scoring is pure Column expressions** (no UDF): per class,
+- **Scoring is plain SQL expressions** (no UDF): per class,
   ``log π_k − Σ_i [½·ln(2π·σ²_ki) + (x_i−μ_ki)²/(2σ²_ki)]`` unrolled over
   the d features (d≈54 here → ~2·K·d scalar ops per row, whole-stage
-  codegen). The feature array is materialized in its own projection first
-  so the vector→array conversion runs once per row. For very large K·d
+  codegen). The expressions are written as SQL text with exact double
+  literals and parsed in one ``selectExpr`` per projection: built as
+  PySpark Columns, each literal and operator was its own set of py4j round
+  trips, ~10 per (class, feature) term, and building the plan cost more
+  than running it on a serving request. Three projections: the feature
+  array (so the vector→array conversion runs once per row), the K
+  log-likelihoods as one array column (so the K×d tree appears once in the
+  plan), then argmax and softmax over that column. For very large K·d
   (thousands), the same state could feed an Arrow-batched pandas UDF; at
   the loans-table shape the expression form is strictly faster.
 
@@ -45,6 +51,8 @@ from pyspark.ml.param import Param, Params, TypeConverters
 from pyspark.ml.util import DefaultParamsReadable, DefaultParamsWritable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from consumer_loans_analysis_spark.pipeline.stages import _ident, _project, _sql
 
 _LN_2PI = math.log(2.0 * math.pi)
 
@@ -127,8 +135,8 @@ class GaussianNBClassifier(Estimator, DefaultParamsReadable, DefaultParamsWritab
 
 
 class GaussianNBModel(Model, DefaultParamsReadable, DefaultParamsWritable):
-    """Fitted Gaussian NB: K×d mean/variance table scored by unrolled
-    Column expressions; ``withVarSmoothing`` re-smooths without refit."""
+    """Fitted Gaussian NB: K×d mean/variance table scored by unrolled SQL
+    expressions; ``withVarSmoothing`` re-smooths without refit."""
 
     modelJson = Param(Params._dummy(), "modelJson", "serialized priors/means/variances", TypeConverters.toString)
     featuresCol = Param(Params._dummy(), "featuresCol", "features vector column", TypeConverters.toString)
@@ -164,43 +172,39 @@ class GaussianNBModel(Model, DefaultParamsReadable, DefaultParamsWritable):
 
         # materialize the array in its own projection so vector→array runs
         # once per row (CSE across sibling expressions is not guaranteed)
-        xcol = "__gnb_x"
+        xcol, llcol = "__gnb_x", "__gnb_ll"
         out = df.withColumn(xcol, vector_to_array(F.col(self.getOrDefault(self.featuresCol))))
 
+        x = _ident(xcol)
         logliks = []
         for k in range(len(classes)):
-            terms = [F.lit(float(state["log_priors"][k]))]
+            terms = [_sql(float(state["log_priors"][k]))]
             for i in range(d):
                 s = state["var"][k][i] + eps
-                mu = state["mu"][k][i]
-                terms.append(F.lit(-0.5 * (_LN_2PI + math.log(s))) -
-                             (out[xcol][i] - F.lit(mu)) ** 2 / F.lit(2.0 * s))
-            ll = terms[0]
-            for t in terms[1:]:
-                ll = ll + t
-            logliks.append(ll)
+                terms.append(
+                    f"({_sql(-0.5 * (_LN_2PI + math.log(s)))}"
+                    f" - power({x}[{i}] - {_sql(state['mu'][k][i])}, 2) / {_sql(2.0 * s)})"
+                )
+            logliks.append(" + ".join(terms))
+        out = _project(out, {llcol: f"array({', '.join(logliks)})"})
 
         # softmax with the max subtracted (logsumexp) for stability. K is
         # small (2 for loans, ≲20 for imputers) so everything is UNROLLED
-        # plain expressions: higher-order-function lambdas re-evaluate
-        # captured expressions per array element and sit outside codegen
-        # subexpression elimination, while identical plain subtrees (the
-        # loglik array, the vector→array conversion) are evaluated once.
-        larr = F.array(*logliks)
-        mx = F.array_max(larr)
-        exps = [F.exp(larr[k] - mx) for k in range(len(classes))]
-        denom = exps[0]
-        for e in exps[1:]:
-            denom = denom + e
-        probs = F.array(*[e / denom for e in exps])
-        # first-max argmax (np.argmax tie convention), mapped to the label
-        pred = F.element_at(
-            F.lit(classes).cast("array<double>"),
-            F.array_position(larr, mx).cast("int"),
-        )
-
+        # plain expressions over the materialized log-likelihood array:
+        # higher-order-function lambdas sit outside codegen subexpression
+        # elimination.
+        ll = _ident(llcol)
+        mx = f"array_max({ll})"
+        exps = [f"exp({ll}[{k}] - {mx})" for k in range(len(classes))]
+        denom = " + ".join(exps)
+        new = {
+            # first-max argmax (np.argmax tie convention), mapped to the label
+            self.getOrDefault(self.predictionCol): (
+                f"element_at(array({', '.join(_sql(float(c)) for c in classes)}),"
+                f" CAST(array_position({ll}, {mx}) AS INT))"
+            ),
+        }
         scores_col = self.getOrDefault(self.scoresCol)
-        out = out.withColumn(self.getOrDefault(self.predictionCol), pred)
         if scores_col:
-            out = out.withColumn(scores_col, probs)
-        return out.drop(xcol)
+            new[scores_col] = "array(" + ", ".join(f"{e} / ({denom})" for e in exps) + ")"
+        return _project(out, new, drop=[xcol, llcol])

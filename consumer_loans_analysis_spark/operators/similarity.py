@@ -1000,6 +1000,13 @@ def pq_topk(
     q_rows = queries.select(
         F.col(id_col).alias("query_id"), unit(F.col(vec_col)).alias("v")
     ).collect()
+    if not q_rows:
+        # empty query set: np.asarray([]) is 1-D, so the LUT build below
+        # would IndexError in every scan task — answer empty, as
+        # ivfadc_topk does, with the scan's output schema
+        return queries.sparkSession.createDataFrame(
+            [], "query_id long, neighbor_id long, cos double, rank int"
+        )
     q_ids = np.array([r["query_id"] for r in q_rows])
     Q = np.asarray([r["v"] for r in q_rows], dtype=np.float64)
     Qs = Q.reshape(len(q_rows), m_subs, dsub)
@@ -1133,8 +1140,9 @@ def ivfadc_topk(
 
     corpus = corpus.filter(_norm(F.col(vec_col)) > 0)
     queries = queries.filter(_norm(F.col(vec_col)) > 0)
-    # staged norm → unit → assignment (the ivf_topk codegen lesson), kept
-    # as ONE checkpointed frame reused by fit-sample, encode and re-rank
+    # staged norm → unit → assignment (the ivf_topk codegen lesson); not
+    # checkpointed — its only consumers are the live fit's sample and the
+    # one fused encode + ADC + re-rank scan
     from consumer_loans_analysis_spark.operators.curation import kmeans_assign
 
     c_unit = (

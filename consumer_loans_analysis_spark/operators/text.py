@@ -522,7 +522,9 @@ def gopher_repetition_rules(
                 ends = [starts[j] + len(ws[j]) for j in range(m)]
                 total = float(len(txt)) if txt else 0.0
                 for n, nm in zip(ns, frac_names):
-                    if m < n:
+                    # empty text has no characters to cover: 0.0, as the
+                    # Spark-expression battery's null → coalesce gave
+                    if m < n or total == 0.0:
                         cols[nm].append(0.0)
                         continue
                     grams = [

@@ -29,7 +29,7 @@ from pyspark.ml.util import DefaultParamsReadable, DefaultParamsWritable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from consumer_loans_analysis_spark.pipeline.stages import _JsonParamMixin
+from consumer_loans_analysis_spark.pipeline.stages import _ident, _JsonParamMixin, _project, _sql
 
 
 def nelder_mead(f, x0: np.ndarray, max_iter: int = 0, xatol: float = 1e-4, fatol: float = 1e-4) -> np.ndarray:
@@ -93,19 +93,13 @@ class CorrMaxCombinerModel(Model, _JsonParamMixin, DefaultParamsReadable, Defaul
 
     def _transform(self, df: DataFrame) -> DataFrame:
         s = self._get_json(self.spec)
-        combined = sum(
-            (F.col(c) * F.lit(w) for c, w in zip(s["cols"], s["weights"])),
-            F.lit(0.0),
+        combined = " + ".join(
+            [_sql(0.0)] + [f"{_ident(c)} * {_sql(w)}" for c, w in zip(s["cols"], s["weights"])]
         )
-        out = df.withColumn(
-            s["newName"],
-            # `or 1.0`: degenerate all-zero-weight fit yields std 0; scale
-            # by 1 instead of an ANSI DIVIDE_BY_ZERO.
-            (combined - F.lit(s["mean"])) / F.lit(s["std"] or 1.0),
-        )
-        if s.get("drop"):
-            out = out.drop(*s["cols"])
-        return out
+        # `or 1.0`: degenerate all-zero-weight fit yields std 0; scale by 1
+        # instead of an ANSI DIVIDE_BY_ZERO.
+        score = f"(({combined}) - {_sql(s['mean'])}) / {_sql(s['std'] or 1.0)}"
+        return _project(df, {s["newName"]: score}, drop=s["cols"] if s.get("drop") else ())
 
 
 class CorrMaxCombiner(Estimator, _JsonParamMixin, DefaultParamsReadable, DefaultParamsWritable):

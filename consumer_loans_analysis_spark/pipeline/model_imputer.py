@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from consumer_loans_analysis_spark.pipeline.stages import _JsonParamMixin
+from consumer_loans_analysis_spark.pipeline.stages import _ident, _JsonParamMixin, _project, _sql
 
 
 def _numeric_cols(df: DataFrame) -> list[str]:
@@ -62,20 +62,14 @@ class ModelImputerModel(Model, MLWritable, MLReadable):
         self.spec = spec or {}
         self.inner = inner
 
-    def _missing_cond(self, col):
-        if self.spec["sentinel"] is None:
-            return col.isNull()
-        return col == self.spec["sentinel"]
-
     def _transform(self, df: DataFrame) -> DataFrame:
         target = self.spec["target"]
         labels = self.spec["labels"]
-        feature_cols = self.spec["featureCols"]
         bag = int(self.spec.get("bagSize", 1))
         # predict over the full frame; missing feature values can't occur
         # (features are the already-processed numeric columns)
-        pred = self.inner.transform(df.select(*df.columns))
-        lab_arr = F.array(*[F.lit(l) for l in labels])
+        pred = self.inner.transform(df)
+        lab_arr = f"array({', '.join(_sql(l) for l in labels)})"
         if bag > 1:
             # seed-bagged soft vote: average the members' per-class
             # probability arrays row-wise, argmax (first max on ties —
@@ -84,43 +78,43 @@ class ModelImputerModel(Model, MLWritable, MLReadable):
             # emp_soft_avg: 5-seed soft avg 0.4834 vs single-seed band
             # 0.4753 ± 0.0044); map-only at transform time, like the
             # single-member path.
-            from functools import reduce as _reduce
-
             if self.spec.get("family") == "gbt_softmax":
-                member_scores = [F.col(f"_mi_scores_{i}") for i in range(bag)]
+                member_scores = [_ident(f"_mi_scores_{i}") for i in range(bag)]
             else:
+                # vector→array has no SQL name: one Column per member
                 from pyspark.ml.functions import vector_to_array
 
-                member_scores = [
-                    vector_to_array(F.col(f"_mi_prob_{i}")) for i in range(bag)
-                ]
-            ssum = _reduce(
-                lambda a, b: F.zip_with(a, b, lambda x, y: x + y), member_scores
-            )
-            label_expr = F.element_at(
-                lab_arr, F.array_position(ssum, F.array_max(ssum)).cast("int")
+                pred = pred.withColumns({
+                    f"_mi_arr_{i}": vector_to_array(F.col(f"_mi_prob_{i}"))
+                    for i in range(bag)
+                })
+                member_scores = [_ident(f"_mi_arr_{i}") for i in range(bag)]
+            ssum = member_scores[0]
+            for m in member_scores[1:]:
+                ssum = f"zip_with({ssum}, {m}, (x, y) -> x + y)"
+            label_expr = (
+                f"element_at({lab_arr}, CAST(array_position({ssum}, array_max({ssum})) AS INT))"
             )
             member_cols = [
                 f"_mi_{kind}_{i}"
                 for i in range(bag)
-                for kind in ("prediction", "scores", "raw", "prob")
+                for kind in ("prediction", "scores", "raw", "prob", "arr")
             ]
         else:
-            label_expr = F.element_at(
-                lab_arr, F.col("_mi_prediction").cast("int") + 1
-            )
+            label_expr = f"element_at({lab_arr}, CAST(_mi_prediction AS INT) + 1)"
             member_cols = []
         if self.spec["numericTarget"]:
-            label_expr = label_expr.cast("double")
-        out = pred.withColumn(
-            target,
-            F.when(self._missing_cond(F.col(target)), label_expr).otherwise(
-                F.col(target)
-            ),
-        )
-        return out.drop(
-            "_mi_features", "_mi_scaled", "_mi_prediction", "_mi_raw",
-            "_mi_prob", "rawPrediction", "probability", *member_cols,
+            label_expr = f"CAST({label_expr} AS DOUBLE)"
+        t = _ident(target)
+        sentinel = self.spec["sentinel"]
+        missing = f"{t} IS NULL" if sentinel is None else f"{t} = {_sql(sentinel)}"
+        return _project(
+            pred,
+            {target: f"CASE WHEN {missing} THEN {label_expr} ELSE {t} END"},
+            drop=[
+                "_mi_features", "_mi_scaled", "_mi_prediction", "_mi_raw",
+                "_mi_prob", "rawPrediction", "probability", *member_cols,
+            ],
         )
 
     # --- persistence ---------------------------------------------------------

@@ -7,6 +7,14 @@ vocabularies, weights) with one aggregation action; every ``transform`` bakes
 that state into the plan as literals — the whole transform path is a single
 shuffle-free projection that Catalyst collapses and codegens.
 
+Transforms build their output columns as SQL text (``_ident`` / ``_sql``)
+and apply them with ONE ``selectExpr`` (``_project``), not as PySpark
+``Column`` trees: every ``F.*`` / ``Column`` call is several py4j round
+trips plus PySpark's call-site capture, so a per-literal Column build cost
+milliseconds per term, while the text of a whole projection is parsed in one
+call. On a serving request the plan build, not Spark, was most of the
+latency.
+
 All stages are ``DefaultParamsWritable`` (S3 persistence); learned state is
 kept in JSON-encoded string Params so save/load round-trips.
 
@@ -17,6 +25,7 @@ Reference citations are in each class docstring (file:line in
 from __future__ import annotations
 
 import json
+import math
 
 from pyspark import keyword_only
 from pyspark.ml import Estimator, Model, Transformer
@@ -36,12 +45,55 @@ class _JsonParamMixin(Params):
         return json.loads(self.getOrDefault(param))
 
 
-def _when_chain(col, mapping: dict, default):
-    """Build a when-chain Column from an ordered mapping (P9/P10 idiom)."""
-    expr = default
-    for k, v in reversed(list(mapping.items())):
-        expr = F.when(col == k, v).otherwise(expr)
-    return expr
+def _ident(name: str) -> str:
+    """A column name as a SQL identifier: backticked, inner backticks
+    doubled (so spaces and dots stay part of the name)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql(value) -> str:
+    """A Python value as a SQL literal typed as ``F.lit`` types it: None →
+    NULL, bool → BOOLEAN, int → INT (BIGINT past 32 bits), float → DOUBLE
+    (``repr`` round-trips, so the double is exact), str → STRING."""
+    if value is None:
+        return "NULL"
+    if isinstance(value, bool):
+        return "true" if value else "false"
+    if isinstance(value, int):
+        text = str(value) if -(2**31) <= value < 2**31 else f"{value}L"
+    elif isinstance(value, float):
+        if not math.isfinite(value):
+            return f"CAST('{value!r}' AS DOUBLE)"
+        text = f"{value!r}D"
+    elif isinstance(value, str):
+        return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    else:
+        raise TypeError(f"no SQL literal for {type(value).__name__}")
+    return f"({text})" if text.startswith("-") else text
+
+
+def _case(col: str, mapping: dict, default: str) -> str:
+    """``CASE WHEN col = key THEN value … ELSE default END`` as SQL text
+    over an ordered {key: SQL value} mapping (the P9/P10 lookup idiom)."""
+    whens = " ".join(f"WHEN {col} = {_sql(k)} THEN {v}" for k, v in mapping.items())
+    return f"CASE {whens} ELSE {default} END" if whens else default
+
+
+def _project(df: DataFrame, new: dict[str, str], drop=()) -> DataFrame:
+    """``df.withColumns(new).drop(*drop)`` as ONE ``selectExpr``, with
+    ``new`` mapping output names to SQL text: a replaced column keeps its
+    position, new ones follow in order. Names match exactly."""
+    drop = set(drop)
+    cols = df.columns
+    exprs = [
+        f"{new[c]} AS {_ident(c)}" if c in new else _ident(c)
+        for c in cols
+        if c not in drop
+    ]
+    exprs += [
+        f"{e} AS {_ident(n)}" for n, e in new.items() if n not in drop and n not in cols
+    ]
+    return df.selectExpr(*exprs)
 
 
 # --- stateless transformers ---------------------------------------------------
@@ -88,8 +140,8 @@ class NonZeroToDouble(Transformer, _JsonParamMixin, DefaultParamsReadable, Defau
         self._set_json(self.cols, cols or [])
 
     def _transform(self, df: DataFrame) -> DataFrame:
-        return df.withColumns(
-            {c: (F.col(c) != 0).cast("double") for c in self._get_json(self.cols)}
+        return _project(
+            df, {c: f"CAST({_ident(c)} != 0 AS DOUBLE)" for c in self._get_json(self.cols)}
         )
 
 
@@ -109,10 +161,8 @@ class OrdinalLadderEncoder(Transformer, _JsonParamMixin, DefaultParamsReadable, 
     def _transform(self, df: DataFrame) -> DataFrame:
         c = self.getOrDefault(self.inputCol)
         ladder = self._get_json(self.ladder)
-        mapping = {v: F.lit(i / len(ladder)) for i, v in enumerate(ladder)}
-        return df.withColumn(
-            c, _when_chain(F.col(c), mapping, F.lit(None).cast("double"))
-        )
+        mapping = {v: _sql(i / len(ladder)) for i, v in enumerate(ladder)}
+        return _project(df, {c: _case(_ident(c), mapping, "CAST(NULL AS DOUBLE)")})
 
 
 class BucketOrdinalEncoder(Transformer, _JsonParamMixin, DefaultParamsReadable, DefaultParamsWritable):
@@ -133,10 +183,10 @@ class BucketOrdinalEncoder(Transformer, _JsonParamMixin, DefaultParamsReadable, 
     def _transform(self, df: DataFrame) -> DataFrame:
         src = self.getOrDefault(self.inputCol)
         dst = self.getOrDefault(self.outputCol)
-        mapping = {k: F.lit(float(v)) for k, v in self._get_json(self.mapping).items()}
-        return df.withColumn(
-            dst, _when_chain(F.col(src), mapping, F.lit(None).cast("double"))
-        ).drop(src)
+        mapping = {k: _sql(float(v)) for k, v in self._get_json(self.mapping).items()}
+        return _project(
+            df, {dst: _case(_ident(src), mapping, "CAST(NULL AS DOUBLE)")}, drop=[src]
+        )
 
 
 class Log1pTransformer(Transformer, _JsonParamMixin, DefaultParamsReadable, DefaultParamsWritable):
@@ -150,7 +200,7 @@ class Log1pTransformer(Transformer, _JsonParamMixin, DefaultParamsReadable, Defa
         self._set_json(self.cols, cols or [])
 
     def _transform(self, df: DataFrame) -> DataFrame:
-        return df.withColumns({c: F.log1p(F.col(c)) for c in self._get_json(self.cols)})
+        return _project(df, {c: f"log1p({_ident(c)})" for c in self._get_json(self.cols)})
 
 
 class RatioFeatures(Transformer, _JsonParamMixin, DefaultParamsReadable, DefaultParamsWritable):
@@ -169,11 +219,12 @@ class RatioFeatures(Transformer, _JsonParamMixin, DefaultParamsReadable, Default
     def _transform(self, df: DataFrame) -> DataFrame:
         # try_divide == `/` when the denominator is nonzero (true for the
         # reference data) but stays NULL instead of throwing under ANSI.
-        return df.withColumns(
+        return _project(
+            df,
             {
-                name: F.try_divide(F.col(num), F.col(den))
+                name: f"try_divide({_ident(num)}, {_ident(den)})"
                 for name, (num, den) in self._get_json(self.ratios).items()
-            }
+            },
         )
 
 
@@ -184,21 +235,21 @@ class AccountMerger(Transformer, DefaultParamsReadable, DefaultParamsWritable):
     emitted in the same select — no pandas-style positional concat (J1)."""
 
     def _transform(self, df: DataFrame) -> DataFrame:
-        d = F.col("DEBIT_CARD") != 0
-        c = F.col("CURRENT_ACCOUNT") != 0
+        d, c = "(DEBIT_CARD != 0)", "(CURRENT_ACCOUNT != 0)"
         merged = (
-            F.when(d & c, "with debit card")
-            .when(~d & ~c, "no")
-            .when(~d & c, "without debit card")
-            .otherwise("invalid")  # cannot occur: card ⇒ account
+            f"CASE WHEN {d} AND {c} THEN 'with debit card'"
+            f" WHEN NOT {d} AND NOT {c} THEN 'no'"
+            f" WHEN NOT {d} AND {c} THEN 'without debit card'"
+            " ELSE 'invalid' END"  # cannot occur: card ⇒ account
         )
-        out = df.withColumn("_HCA", merged).drop("DEBIT_CARD", "CURRENT_ACCOUNT")
-        for cat in ["no", "with debit card", "without debit card"]:
-            out = out.withColumn(
-                f"HAS_CURRENT_ACCOUNT_{cat}",
-                (F.col("_HCA") == cat).cast("double"),
-            )
-        return out.drop("_HCA")
+        return _project(
+            df,
+            {
+                f"HAS_CURRENT_ACCOUNT_{cat}": f"CAST(({merged}) = {_sql(cat)} AS DOUBLE)"
+                for cat in ["no", "with debit card", "without debit card"]
+            },
+            drop=["DEBIT_CARD", "CURRENT_ACCOUNT"],
+        )
 
 
 # --- fit-state stages ---------------------------------------------------------
@@ -213,11 +264,12 @@ class IQRWinsorizerModel(Model, _JsonParamMixin, DefaultParamsReadable, DefaultP
         self._set_json(self.bounds, bounds or {})
 
     def _transform(self, df: DataFrame) -> DataFrame:
-        return df.withColumns(
+        return _project(
+            df,
             {
-                c: F.least(F.greatest(F.col(c).cast("double"), F.lit(lo)), F.lit(hi))
+                c: f"least(greatest(CAST({_ident(c)} AS DOUBLE), {_sql(lo)}), {_sql(hi)})"
                 for c, (lo, hi) in self._get_json(self.bounds).items()
-            }
+            },
         )
 
 
@@ -268,12 +320,13 @@ class SentinelModeImputerModel(Model, _JsonParamMixin, DefaultParamsReadable, De
         self._set(sentinel=sentinel)
 
     def _transform(self, df: DataFrame) -> DataFrame:
-        s = self.getOrDefault(self.sentinel)
-        return df.withColumns(
+        s = _sql(self.getOrDefault(self.sentinel))
+        return _project(
+            df,
             {
-                c: F.when(F.col(c) == s, F.lit(m)).otherwise(F.col(c))
+                c: f"CASE WHEN {_ident(c)} = {s} THEN {_sql(m)} ELSE {_ident(c)} END"
                 for c, m in self._get_json(self.modes).items()
-            }
+            },
         )
 
 
@@ -296,12 +349,13 @@ class SentinelModeImputer(Estimator, _JsonParamMixin, DefaultParamsReadable, Def
         s = self.getOrDefault(self.sentinel)
         modes = {}
         for c in self._get_json(self.cols):
+            col = F.col(_ident(c))
             # max_by on (count, reversed value) == most frequent, ties → smallest
             row = (
-                df.filter(F.col(c) != s)
-                .groupBy(c)
+                df.filter(col != s)
+                .groupBy(col)
                 .agg(F.count(F.lit(1)).alias("n"))
-                .agg(F.min_by(c, F.struct(-F.col("n"), F.col(c))).alias("mode"))
+                .agg(F.min_by(col, F.struct(-F.col("n"), col)).alias("mode"))
                 .head()
             )
             modes[c] = row["mode"]
@@ -319,11 +373,12 @@ class ScalarStandardScalerModel(Model, _JsonParamMixin, DefaultParamsReadable, D
         self._set_json(self.stats, stats or {})
 
     def _transform(self, df: DataFrame) -> DataFrame:
-        return df.withColumns(
+        return _project(
+            df,
             {
-                c: (F.col(c) - F.lit(mu)) / F.lit(sd)
+                c: f"({_ident(c)} - {_sql(mu)}) / {_sql(sd)}"
                 for c, (mu, sd) in self._get_json(self.stats).items()
-            }
+            },
         )
 
 
@@ -365,11 +420,13 @@ class NamedOneHotEncoderModel(Model, _JsonParamMixin, DefaultParamsReadable, Def
         self._set_json(self.vocab, vocab or {})
 
     def _transform(self, df: DataFrame) -> DataFrame:
-        new_cols = {}
-        for c, cats in self._get_json(self.vocab).items():
-            for cat in cats:
-                new_cols[f"{c}_{cat}"] = (F.col(c) == cat).cast("double")
-        return df.withColumns(new_cols).drop(*self._get_json(self.vocab).keys())
+        vocab = self._get_json(self.vocab)
+        new_cols = {
+            f"{c}_{cat}": f"CAST({_ident(c)} = {_sql(cat)} AS DOUBLE)"
+            for c, cats in vocab.items()
+            for cat in cats
+        }
+        return _project(df, new_cols, drop=vocab)
 
 
 class NamedOneHotEncoder(Estimator, _JsonParamMixin, DefaultParamsReadable, DefaultParamsWritable):
@@ -396,7 +453,7 @@ class NamedOneHotEncoder(Estimator, _JsonParamMixin, DefaultParamsReadable, Defa
         for c in cols:
             vals = [
                 r[c]
-                for r in df.select(c).distinct().collect()
+                for r in df.select(F.col(_ident(c))).distinct().collect()
                 if r[c] is not None and r[c] not in excluded
             ]
             vocab[c] = sorted(vals)
@@ -421,22 +478,18 @@ class TargetMeanEncoderModel(Model, _JsonParamMixin, DefaultParamsReadable, Defa
         self._set(globalMean=globalMean)
 
     def _transform(self, df: DataFrame) -> DataFrame:
-        g = F.lit(self.getOrDefault(self.globalMean))
+        g = _sql(self.getOrDefault(self.globalMean))
         out = {}
         for c, enc in self._get_json(self.encodings).items():
-            # literal map lookup: one create_map expression regardless of
-            # vocab size (vs an O(|vocab|)-deep when-chain); unknown/null
-            # categories back off to the global mean
+            # literal map lookup: one map expression regardless of vocab
+            # size (vs an O(|vocab|)-deep CASE); unknown/null categories
+            # back off to the global mean
             if enc:
-                m = F.create_map(
-                    *[x for k, v in enc.items() for x in (F.lit(k), F.lit(float(v)))]
-                )
-                out[f"{c}_te"] = F.coalesce(
-                    m.getItem(F.col(c).cast("string")), g
-                )
+                m = ", ".join(f"{_sql(k)}, {_sql(float(v))}" for k, v in enc.items())
+                out[f"{c}_te"] = f"coalesce(map({m})[CAST({_ident(c)} AS STRING)], {g})"
             else:
                 out[f"{c}_te"] = g
-        return df.withColumns(out)
+        return _project(df, out)
 
 
 class TargetMeanEncoder(Estimator, _JsonParamMixin, DefaultParamsReadable, DefaultParamsWritable):

@@ -2214,3 +2214,36 @@ def test_fit_subspace_codebooks_dispatch_bit_identical(spark):
         sim._PARALLEL_FIT_MIN_FLOPS = orig
     assert (serial == reference).all()
     assert (parallel == reference).all()
+
+
+def test_ann_topk_empty_queries_give_empty_result(spark, sf_dir):
+    """An empty query frame is answered with 0 rows of the contract schema
+    by both PQ operators, not an executor traceback."""
+    from consumer_loans_analysis_spark.operators.ivf_centroids import IVF_CENTROIDS
+    from consumer_loans_analysis_spark.operators.pq_codebooks import PQ_CODEBOOKS
+    from consumer_loans_analysis_spark.sources.readers import read_table
+
+    emb = read_table(spark, sf_dir, "embeddings")
+    corpus = emb.filter(F.col("vec_id") >= 5)
+    none = emb.filter(F.col("vec_id") < 0)
+    for out in (
+        similarity.pq_topk(corpus, none, k=5, m_subs=16, ks=64, codebooks=PQ_CODEBOOKS),
+        similarity.ivfadc_topk(
+            corpus, none, k=5, n_probe=2, m_subs=16, ks=64,
+            centroids=IVF_CENTROIDS, codebooks=PQ_CODEBOOKS,
+        ),
+    ):
+        assert out.columns == ["query_id", "neighbor_id", "cos", "rank"]
+        assert out.collect() == []
+
+
+def test_gopher_repetition_unigram_rule_on_empty_text(spark):
+    """An n=1 rule on empty or all-space text reads 0.0 (nothing to cover),
+    as the Spark-expression battery did, instead of dividing by zero."""
+    from consumer_loans_analysis_spark.operators.text import gopher_repetition_rules
+
+    df = spark.createDataFrame([(0, ""), (1, "   ")], "doc_id long, text string")
+    rows = gopher_repetition_rules(
+        df, top_ngram_max_frac=(), dup_ngram_max_frac=((1, 0.15),)
+    ).orderBy("doc_id").collect()
+    assert [(r["dup_1gram_frac"], r["keep"]) for r in rows] == [(0.0, True), (0.0, True)]

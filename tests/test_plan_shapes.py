@@ -343,3 +343,23 @@ def test_pipe4_two_shuffles_and_clean_before_dedup(spark, sf_dir):
     registry.load_all()
     plan = _plan(registry.QUERIES["pipe4_clean_dedup_shard"](spark, sf_dir))
     assert plan.count("Exchange hashpartitioning") == 2, plan
+
+
+def test_gaussian_nb_loglik_tree_built_once(spark):
+    """GaussianNBModel scores from ONE materialized log-likelihood array:
+    the optimized plan holds exactly K·d POWER terms (K=2 classes, d=3
+    features), not a copy of the K×d tree per argmax and softmax use."""
+    import re
+
+    from pyspark.ml.feature import VectorAssembler
+
+    from consumer_loans_analysis_spark.ml.gaussian_nb import GaussianNBClassifier
+
+    df = spark.createDataFrame(
+        [(0.0, 1.0, 2.0, 0.5), (0.0, 1.5, 1.0, 0.0), (1.0, 4.0, 0.5, 2.0), (1.0, 3.5, 0.0, 1.5)],
+        "y double, a double, b double, c double",
+    )
+    feats = VectorAssembler(inputCols=["a", "b", "c"], outputCol="features").transform(df)
+    model = GaussianNBClassifier(labelCol="y").fit(feats)
+    plan = model.transform(feats)._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"\bpower\(", plan, re.IGNORECASE)) == 2 * 3, plan
